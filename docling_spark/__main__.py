@@ -22,9 +22,12 @@ import sys
 def convert_main(argv: list[str]) -> int:
     """Reference-CLI parity (`docling <sources> --to md --output dir`,
     /root/reference/docling/cli/main.py:307): convert local files through
-    the same extraction cores, no Spark session needed."""
+    the same extraction cores, no Spark session needed. Each file is
+    classified like a Spark job row (job.sniff_content_type, with the file
+    name as url) and routed through job._doc_backend; PDFs keep their own
+    branch for the page-range, page-limit and password options."""
     p = argparse.ArgumentParser(prog="docling_spark convert")
-    p.add_argument("sources", nargs="+", help="html/pdf files")
+    p.add_argument("sources", nargs="+", help="files to convert")
     p.add_argument(
         "--to",
         default="md",
@@ -62,8 +65,9 @@ def convert_main(argv: list[str]) -> int:
         "--from",
         dest="from_formats",
         default=None,
-        help="comma allowlist of input formats (html,pdf,docx,xlsx,pptx,md,"
-        "asciidoc,csv,vtt,jats,uspto,ofd,json); others are skipped",
+        help="comma allowlist of content types as the Spark job names them "
+        "(html,pdf,docx,xlsx,pptx,md,asciidoc,csv,vtt,jats,uspto,ofd,"
+        "docling_json,doctags); others are skipped",
     )
     args = p.parse_args(argv)
     page_range = (1, 2**31 - 1)
@@ -76,48 +80,9 @@ def convert_main(argv: list[str]) -> int:
         else None
     )
 
-    def fmt_allowed(fmt: str) -> bool:
-        return allowed is None or fmt in allowed
-
-    def detect_fmt(path, raw: bytes) -> str:
-        """Mirror of the dispatch chain below, for the --from allowlist."""
-        suf = path.suffix.lower()
-        if raw[:5] == b"%PDF-" or suf == ".pdf":
-            return "pdf"
-        if raw[:6] == b"WEBVTT" or suf == ".vtt":
-            return "vtt"
-        if suf == ".docx" or (raw[:2] == b"PK" and b"word/document.xml" in raw):
-            return "docx"
-        if suf in (".pptx", ".pptm", ".potx") or (
-            raw[:2] == b"PK" and b"ppt/presentation.xml" in raw
-        ):
-            return "pptx"
-        if suf in (".xlsx", ".xlsm") or (
-            raw[:2] == b"PK" and b"xl/workbook.xml" in raw
-        ):
-            return "xlsx"
-        from .usptox import looks_like_uspto
-
-        if suf != ".nxml" and looks_like_uspto(raw):
-            return "uspto"
-        if suf == ".nxml" or (
-            b"JATS-journalpublishing" in raw[:8192]
-            or b"JATS-archive" in raw[:8192]
-        ):
-            return "jats"
-        if suf in (".adoc", ".asciidoc", ".asc"):
-            return "asciidoc"
-        if suf in (".md", ".markdown"):
-            return "md"
-        if suf == ".ofd" or (raw[:2] == b"PK" and b"OFD.xml" in raw):
-            return "ofd"
-        if suf == ".csv":
-            return "csv"
-        return "html"
-
     from pathlib import Path
 
-    from .htmlx.extract import extract_html
+    from .job import _doc_backend, sniff_content_type
     from .pdfx.extract import extract_pdf_text
     from .serialize import to_itxt, to_markdown
     from .serialize_json import to_docling_json
@@ -129,12 +94,14 @@ def convert_main(argv: list[str]) -> int:
     for src in args.sources:
         path = Path(src)
         raw = path.read_bytes()
-        doc = None
-        if not fmt_allowed(detect_fmt(path, raw)):
+        # the file name stands in for the url: same law as the Spark job
+        content_type = sniff_content_type(path.name, raw)
+        if allowed is not None and content_type not in allowed:
             print(f"skipped {path.name}: format not in --from")
             continue
+        doc = None
         try:
-            if raw[:5] == b"%PDF-" or path.suffix.lower() == ".pdf":
+            if content_type == "pdf":
                 res = extract_pdf_text(
                     raw,
                     password=args.pdf_password,
@@ -144,172 +111,22 @@ def convert_main(argv: list[str]) -> int:
                 if res.status in ("failure",):
                     raise RuntimeError(res.error or res.status)
                 outputs = {"md": res.text, "text": res.text, "itxt": None, "json": None}
-            elif raw[:6] == b"WEBVTT" or path.suffix.lower() == ".vtt":
-                from .vttx import extract_vtt
-
-                doc = extract_vtt(raw, name=path.stem)
-                # reference vtt goldens export with escape_html=False
-                # (tests/test_backend_vtt.py:220) — same as the job path
-                outputs = {
-                    "md": to_markdown(doc, escape_html=False),
-                    "text": to_markdown(doc, escape_html=False),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(doc, path.name, raw, mimetype="text/vtt"),
-                }
-            elif path.suffix.lower() == ".docx" or (
-                raw[:2] == b"PK" and b"word/document.xml" in raw
-            ):
-                from .docxx import extract_docx
-
-                doc = extract_docx(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc,
-                        path.name,
-                        raw,
-                        mimetype=(
-                            "application/vnd.openxmlformats-officedocument."
-                            "wordprocessingml.document"
-                        ),
-                    ),
-                }
-            elif path.suffix.lower() in (".pptx", ".pptm", ".potx") or (
-                raw[:2] == b"PK" and b"ppt/presentation.xml" in raw
-            ):
-                from .pptxx import extract_pptx
-
-                doc = extract_pptx(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc,
-                        path.name,
-                        raw,
-                        mimetype="application/vnd.ms-powerpoint",
-                    ),
-                }
-            elif path.suffix.lower() in (".xlsx", ".xlsm") or (
-                raw[:2] == b"PK" and b"xl/workbook.xml" in raw
-            ):
-                from .xlsxx import extract_xlsx
-
-                doc = extract_xlsx(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc,
-                        path.name,
-                        raw,
-                        mimetype=(
-                            "application/vnd.openxmlformats-officedocument."
-                            "spreadsheetml.sheet"
-                        ),
-                    ),
-                }
-            elif path.suffix.lower() != ".nxml" and __import__(
-                "docling_spark.usptox", fromlist=["looks_like_uspto"]
-            ).looks_like_uspto(raw):
-                from .usptox import extract_uspto
-
-                doc = extract_uspto(raw, name=path.name)
-                mime = (
-                    "text/plain" if raw.startswith(b"PATN") else "application/xml"
-                )
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, None),
-                    "json": to_docling_json(doc, path.name, raw, mimetype=mime),
-                }
-            elif path.suffix.lower() == ".nxml" or (
-                b"JATS-journalpublishing" in raw[:8192]
-                or b"JATS-archive" in raw[:8192]
-            ):
-                from .jatsx import extract_jats
-
-                doc = extract_jats(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc, path.name, raw, mimetype="application/xml"
-                    ),
-                }
-            elif path.suffix.lower() in (".adoc", ".asciidoc", ".asc"):
-                from .asciidocx import extract_asciidoc
-
-                doc = extract_asciidoc(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc, path.name, raw, mimetype="text/asciidoc"
-                    ),
-                }
-            elif path.suffix.lower() in (".md", ".markdown"):
-                from .mdx import extract_markdown
-
-                doc = extract_markdown(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc, path.name, raw, mimetype="text/markdown"
-                    ),
-                }
-            elif raw.lstrip()[:8] == b"<doctag>":
-                from .doctagsx import parse_doctags
-
-                doc = parse_doctags(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc, path.name, raw, mimetype="text/plain"
-                    ),
-                }
-            elif path.suffix.lower() == ".ofd" or (
-                raw[:2] == b"PK" and b"OFD.xml" in raw
-            ):
-                from .ofdx import extract_ofd
-
-                doc = extract_ofd(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(
-                        doc, path.name, raw, mimetype="application/zip"
-                    ),
-                }
-            elif path.suffix.lower() == ".csv":
-                from .csvx import extract_csv
-
-                doc = extract_csv(raw, name=path.stem)
-                outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(doc, path.name, raw, mimetype="text/csv"),
-                }
             else:
-                doc = extract_html(raw, base_uri="None", name=path.stem)
+                routed = _doc_backend(content_type, raw, path.name, "none")
+                if routed is None:
+                    print(
+                        f"skipped {path.name}: unsupported content type "
+                        f"{content_type}"
+                    )
+                    continue
+                doc, filename, mimetype, itxt_width, md_kwargs = routed
+                md = to_markdown(doc, **md_kwargs)
+                kw = {} if mimetype is None else {"mimetype": mimetype}
                 outputs = {
-                    "md": to_markdown(doc),
-                    "text": to_markdown(doc),
-                    "itxt": to_itxt(doc, 70),
-                    "json": to_docling_json(doc, path.name, raw),
+                    "md": md,
+                    "text": md,
+                    "itxt": to_itxt(doc, itxt_width),
+                    "json": to_docling_json(doc, filename, raw, **kw),
                 }
         except Exception as e:  # noqa: BLE001 — per-file containment
             print(f"FAILED {path.name}: {e}", file=sys.stderr)

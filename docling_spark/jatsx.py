@@ -33,14 +33,6 @@ _DEFAULT_ABSTRACT = "Abstract"
 _DEFAULT_REFERENCES = "References"
 _DEFAULT_ETAL = "et al."
 
-JATS_DTD_MARKERS = ("JATS-journalpublishing", "JATS-archive")
-
-
-def looks_like_jats(raw: bytes) -> bool:
-    head = raw[:8192].decode("utf-8", "replace")
-    return any(m in head for m in JATS_DTD_MARKERS)
-
-
 def _get_text(node, sep: Optional[str] = None) -> str:
     """Recursive text concat skipping term/formula nodes (reference
     _get_text, :173-189)."""

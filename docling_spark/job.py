@@ -26,6 +26,7 @@ Scale design notes
 
 from __future__ import annotations
 
+import re
 import time
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -246,6 +247,117 @@ def _csv_sniff(head, prefix_bytes: int):
         | consistent("\t")
         | consistent(r"\|")
     )
+
+
+# Python renderings of the dispatch column's regexes with Java semantics:
+# re.ASCII gives Java's ASCII-only \s and case folding; in the extension
+# pattern `.` stops at every Java line terminator and Java's `$` (which
+# also matches before one final terminator) becomes the lookahead.
+_HTML_SNIFF_PY = re.compile(_HTML_SNIFF_RE, re.ASCII)
+_DOCLING_JSON_PY = re.compile(
+    r'(?s)^\s*\{\s*"schema_name"\s*:\s*"DoclingDocument"', re.ASCII
+)
+_DOCTAGS_PY = re.compile(r"(?s)^\s*<doctag>", re.ASCII)
+_URL_EXT_PY = re.compile(
+    r"\.([A-Za-z0-9]+)(?:[?#][^\n\r\x85\u2028\u2029]*)?"
+    r"(?=(?:\r\n|[\n\r\x85\u2028\u2029])?\Z)"
+)
+_USPTO_MARKERS = (
+    b"us-patent-application-v4", b"us-patent-grant-v4", b"us-grant-025",
+    b"US-Grant-025",
+)
+_IMAGE_MAGICS = (b"\x89PNG", b"\xff\xd8\xff", b"GIF8", b"II*\x00", b"MM\x00*", b"BM")
+
+
+def sniff_content_type(url: Optional[str], raw: Optional[bytes]) -> str:
+    """The dispatch column of :func:`with_content_type` for one document,
+    in Python: the same rules in the same order over the same bounded
+    windows (its default ``prefix_bytes`` and ``zip_probe_bytes``), for the
+    single-file paths (convert CLI, web demo) that run without a Spark
+    session. tests/test_sniff_parity.py pins it to the JVM column row by
+    row."""
+    prefix_bytes, zip_probe_bytes = 8192, 65536
+    raw = raw or b""
+    magic = raw[:12]
+    head_bin = raw[:prefix_bytes]
+    head = head_bin.decode("utf-8", "replace")
+    m = _URL_EXT_PY.search(url or "")
+    ext = m.group(1).lower() if m else ""
+
+    def zip_member(name: bytes) -> bool:
+        return magic[:2] == b"PK" and (
+            name in raw[:zip_probe_bytes] or name in raw[-zip_probe_bytes:]
+        )
+
+    if magic.startswith(b"%PDF-"):
+        return "pdf"
+    if ext in ("html", "htm", "xhtml"):
+        return "html"
+    if ext == "pdf":
+        return "pdf"
+    if ext == "csv":
+        return "csv"
+    if magic.startswith(b"WEBVTT") or ext == "vtt":
+        return "vtt"
+    if ext in ("md", "markdown"):
+        return "md"
+    if ext in ("adoc", "asciidoc", "asc"):
+        return "asciidoc"
+    if b"JATS-journalpublishing" in head_bin or b"JATS-archive" in head_bin:
+        return "jats"
+    if (
+        magic.startswith(b"PATN")
+        or any(k in head_bin for k in _USPTO_MARKERS)
+        or (b"patent-application-publication" in head_bin and b"pap-v1" in head_bin)
+    ):
+        return "uspto"
+    if ext == "ofd" or zip_member(b"OFD.xml"):
+        return "ofd"
+    if ext == "docx":
+        return "docx"
+    if ext in ("xlsx", "xlsm"):
+        return "xlsx"
+    if ext in ("pptx", "pptm", "potx"):
+        return "pptx"
+    if zip_member(b"word/document.xml"):
+        return "docx"
+    if zip_member(b"xl/workbook.xml"):
+        return "xlsx"
+    if zip_member(b"ppt/presentation.xml"):
+        return "pptx"
+    if magic.startswith(b"\x1f\x8b"):
+        return "mets_gbs"
+    if (
+        magic.startswith(_IMAGE_MAGICS)
+        or (magic[:4] == b"RIFF" and magic[8:12] == b"WEBP")
+        or ext in ("png", "jpg", "jpeg", "gif", "tif", "tiff", "bmp", "webp")
+    ):
+        return "image"
+    if (
+        (magic[:4] == b"RIFF" and magic[8:12] == b"WAVE")
+        or magic.startswith(b"ID3")
+        or ext in ("wav", "mp3", "m4a", "flac", "ogg")
+    ):
+        return "audio"
+    if _DOCLING_JSON_PY.search(head):
+        return "docling_json"
+    if _DOCTAGS_PY.search(head):
+        return "doctags"
+    if _HTML_SNIFF_PY.search(head):
+        return "html"
+    # _csv_sniff: drop a line the head window may have cut, then one of
+    # , ; TAB | appears the same (>= 1) number of times on each of the
+    # first 2..5 non-empty lines
+    lines = re.split(r"\r\n|\r|\n", head)
+    if len(raw) > prefix_bytes:
+        lines = lines[:-1]
+    sample = [ln for ln in lines if ln][:5]
+    if len(sample) >= 2 and any(
+        sample[0].count(d) >= 1 and len({ln.count(d) for ln in sample}) == 1
+        for d in ",;\t|"
+    ):
+        return "csv"
+    return "other"
 
 
 def dedup_latest_crawl(df: DataFrame) -> DataFrame:

@@ -35,13 +35,6 @@ from .model import SpanDoc
 _DEFAULT_NS = "http://www.ofdspec.org/2016"
 
 
-def looks_like_ofd(raw: bytes) -> bool:
-    """Cheap container probe (reference _probe_validity checks for OFD.xml)."""
-    if raw[:2] != b"PK":
-        return False
-    return b"OFD.xml" in raw
-
-
 def _to_float(value: Optional[str]) -> Optional[float]:
     if value is None:
         return None

@@ -259,7 +259,7 @@ class _MdWriter:
                 elif sub.kind == "group" and sub.label == "list":
                     sublists.append(sub)
                 elif sub.kind == "text" and self._visible(sub):
-                    s = _inline(sub)
+                    s = _inline(sub, self.escape_html)
                     if s:
                         parts.append(s)
             # keep the item text's own trailing whitespace (pptx sample
@@ -498,10 +498,3 @@ def to_itxt(
 
     visit(0, 0)
     return "\n".join(lines)
-
-
-# ----------------------------------------------------------------- plain text
-def to_text(doc: SpanDoc, layers: Iterable[str] = DEFAULT_LAYERS) -> str:
-    """Plain extracted text: markdown minus markup — the `extracted_text`
-    output column's contract is markdown (goldens are .md files)."""
-    return to_markdown(doc, layers)
