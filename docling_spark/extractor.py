@@ -134,6 +134,7 @@ def extract_document(
     ``template``: see :func:`compile_template` (or a precompiled list);
     when given, each page's ``extracted_data`` is filled from its
     raw_text."""
+    from .job import sniff_content_type
     from .pdfx.extract import extract_pdf_text
 
     compiled = None
@@ -146,7 +147,8 @@ def extract_document(
 
     res = ExtractionResult(source=source)
     try:
-        if blob[:5] == b"%PDF-":
+        ct = sniff_content_type(source, blob)
+        if ct == "pdf":
             pr = extract_pdf_text(
                 blob,
                 password=password,
@@ -190,6 +192,11 @@ def extract_document(
                         )
                     )
                     ti += 1
+            return res
+        if ct != "image":
+            # the reference extractor has PDF and image backends only
+            res.status = "failure"
+            res.errors.append(f"unsupported content type {ct}")
             return res
         # image inputs: reference routes these to the VLM extractor; the
         # deterministic engine reports the page with an explicit error

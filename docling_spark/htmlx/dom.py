@@ -141,9 +141,6 @@ class Tag:
     def get(self, key: str, default=None):
         return self.attrs.get(key, default)
 
-    def has_attr(self, key: str) -> bool:
-        return key in self.attrs
-
     # --- structure manipulation -------------------------------------------
     def append_child(self, node) -> None:
         node.parent = self

@@ -45,6 +45,20 @@ _HTML_SNIFF_RE = (
     r"(?is)^\s*(<!--.*?-->\s*)*(<script.*?>.*?</script>\s*)?"
     r"(<!doctype\s+html|<html|<head|<body)"
 )
+_DOCLING_JSON_RE = r'(?s)^\s*\{\s*"schema_name"\s*:\s*"DoclingDocument"'
+_DOCTAGS_RE = r"(?s)^\s*<doctag>"
+_USPTO_MARKERS = (
+    b"us-patent-application-v4", b"us-patent-grant-v4", b"us-grant-025",
+    b"US-Grant-025",
+)
+_IMAGE_MAGICS = (b"\x89PNG", b"\xff\xd8\xff", b"GIF8", b"II*\x00", b"MM\x00*", b"BM")
+_HTML_EXTS = ("html", "htm", "xhtml")
+_MD_EXTS = ("md", "markdown")
+_ASCIIDOC_EXTS = ("adoc", "asciidoc", "asc")
+_XLSX_EXTS = ("xlsx", "xlsm")
+_PPTX_EXTS = ("pptx", "pptm", "potx")
+_IMAGE_EXTS = ("png", "jpg", "jpeg", "gif", "tif", "tiff", "bmp", "webp")
+_AUDIO_EXTS = ("wav", "mp3", "m4a", "flac", "ogg")
 
 
 def with_content_type(
@@ -119,33 +133,28 @@ def with_content_type(
         )
 
     ext = F.col("_ext")
-    return df.withColumn(
-        "content_type",
+    uspto = F.substring(magic, 1, 4) == F.lit(b"PATN")
+    for m in _USPTO_MARKERS:
+        uspto = uspto | F.contains(head_bin, F.lit(m))
+    uspto = uspto | (
+        F.contains(head_bin, F.lit(b"patent-application-publication"))
+        & F.contains(head_bin, F.lit(b"pap-v1"))
+    )
+    ct = (
         F.when(F.substring(magic, 1, 5) == F.lit(b"%PDF-"), "pdf")
-        .when(ext.isin("html", "htm", "xhtml"), "html")
+        .when(ext.isin(*_HTML_EXTS), "html")
         .when(ext == "pdf", "pdf")
         .when(ext == "csv", "csv")
         .when(F.substring(magic, 1, 6) == F.lit(b"WEBVTT"), "vtt")
         .when(ext == "vtt", "vtt")
-        .when(ext.isin("md", "markdown"), "md")
-        .when(ext.isin("adoc", "asciidoc", "asc"), "asciidoc")
+        .when(ext.isin(*_MD_EXTS), "md")
+        .when(ext.isin(*_ASCIIDOC_EXTS), "asciidoc")
         .when(
             F.contains(head_bin, F.lit(b"JATS-journalpublishing"))
             | F.contains(head_bin, F.lit(b"JATS-archive")),
             "jats",
         )
-        .when(
-            (F.substring(magic, 1, 4) == F.lit(b"PATN"))
-            | F.contains(head_bin, F.lit(b"us-patent-application-v4"))
-            | F.contains(head_bin, F.lit(b"us-patent-grant-v4"))
-            | F.contains(head_bin, F.lit(b"us-grant-025"))
-            | F.contains(head_bin, F.lit(b"US-Grant-025"))
-            | (
-                F.contains(head_bin, F.lit(b"patent-application-publication"))
-                & F.contains(head_bin, F.lit(b"pap-v1"))
-            ),
-            "uspto",
-        )
+        .when(uspto, "uspto")
         .when(ext == "ofd", "ofd")
         .when(
             (F.substring(magic, 1, 2) == F.lit(b"PK"))
@@ -153,8 +162,8 @@ def with_content_type(
             "ofd",
         )
         .when(ext == "docx", "docx")
-        .when(ext.isin("xlsx", "xlsm"), "xlsx")
-        .when(ext.isin("pptx", "pptm", "potx"), "pptx")
+        .when(ext.isin(*_XLSX_EXTS), "xlsx")
+        .when(ext.isin(*_PPTX_EXTS), "pptx")
         .when(
             (F.substring(magic, 1, 2) == F.lit(b"PK"))
             & zip_member(b"word/document.xml"),
@@ -174,23 +183,18 @@ def with_content_type(
         # gracefully skips non-METS archives, mirroring the reference's
         # content-inspecting _guess_format, document.py:688-707)
         .when(F.substring(magic, 1, 2) == F.lit(b"\x1f\x8b"), "mets_gbs")
-        # image magics (reference image_backend routing — such rows get an
-        # explicit needs_ocr status rather than silently skipping)
-        .when(F.substring(magic, 1, 4) == F.lit(b"\x89PNG"), "image")
-        .when(F.substring(magic, 1, 3) == F.lit(b"\xff\xd8\xff"), "image")
-        .when(F.substring(magic, 1, 4) == F.lit(b"GIF8"), "image")
-        .when(F.substring(magic, 1, 4) == F.lit(b"II*\x00"), "image")
-        .when(F.substring(magic, 1, 4) == F.lit(b"MM\x00*"), "image")
-        .when(F.substring(magic, 1, 2) == F.lit(b"BM"), "image")
-        .when(
+    )
+    # image magics (reference image_backend routing — such rows get an
+    # explicit needs_ocr status rather than silently skipping)
+    for m in _IMAGE_MAGICS:
+        ct = ct.when(F.substring(magic, 1, len(m)) == F.lit(m), "image")
+    ct = (
+        ct.when(
             (F.substring(magic, 1, 4) == F.lit(b"RIFF"))
             & (F.substring(magic, 9, 4) == F.lit(b"WEBP")),
             "image",
         )
-        .when(
-            ext.isin("png", "jpg", "jpeg", "gif", "tif", "tiff", "bmp", "webp"),
-            "image",
-        )
+        .when(ext.isin(*_IMAGE_EXTS), "image")
         # audio magics/extensions (reference NoOpBackend → ASR pipeline,
         # NN and out of contract — explicit status instead of silent skip)
         .when(
@@ -199,16 +203,16 @@ def with_content_type(
             "audio",
         )
         .when(F.substring(magic, 1, 3) == F.lit(b"ID3"), "audio")
-        .when(ext.isin("wav", "mp3", "m4a", "flac", "ogg"), "audio")
-        .when(
-            head.rlike(r'(?s)^\s*\{\s*"schema_name"\s*:\s*"DoclingDocument"'),
-            "docling_json",
-        )
-        .when(head.rlike(r"(?s)^\s*<doctag>"), "doctags")
+        .when(ext.isin(*_AUDIO_EXTS), "audio")
+        .when(head.rlike(_DOCLING_JSON_RE), "docling_json")
+        .when(head.rlike(_DOCTAGS_RE), "doctags")
         .when(head.rlike(_HTML_SNIFF_RE), "html")
         .when(_csv_sniff(head, prefix_bytes), "csv")
-        .otherwise("other"),
-    ).drop("_magic", "_head_bin", "_head", "_ext")
+        .otherwise("other")
+    )
+    return df.withColumn("content_type", ct).drop(
+        "_magic", "_head_bin", "_head", "_ext"
+    )
 
 
 def _csv_sniff(head, prefix_bytes: int):
@@ -254,19 +258,12 @@ def _csv_sniff(head, prefix_bytes: int):
 # pattern `.` stops at every Java line terminator and Java's `$` (which
 # also matches before one final terminator) becomes the lookahead.
 _HTML_SNIFF_PY = re.compile(_HTML_SNIFF_RE, re.ASCII)
-_DOCLING_JSON_PY = re.compile(
-    r'(?s)^\s*\{\s*"schema_name"\s*:\s*"DoclingDocument"', re.ASCII
-)
-_DOCTAGS_PY = re.compile(r"(?s)^\s*<doctag>", re.ASCII)
+_DOCLING_JSON_PY = re.compile(_DOCLING_JSON_RE, re.ASCII)
+_DOCTAGS_PY = re.compile(_DOCTAGS_RE, re.ASCII)
 _URL_EXT_PY = re.compile(
     r"\.([A-Za-z0-9]+)(?:[?#][^\n\r\x85\u2028\u2029]*)?"
     r"(?=(?:\r\n|[\n\r\x85\u2028\u2029])?\Z)"
 )
-_USPTO_MARKERS = (
-    b"us-patent-application-v4", b"us-patent-grant-v4", b"us-grant-025",
-    b"US-Grant-025",
-)
-_IMAGE_MAGICS = (b"\x89PNG", b"\xff\xd8\xff", b"GIF8", b"II*\x00", b"MM\x00*", b"BM")
 
 
 def sniff_content_type(url: Optional[str], raw: Optional[bytes]) -> str:
@@ -291,7 +288,7 @@ def sniff_content_type(url: Optional[str], raw: Optional[bytes]) -> str:
 
     if magic.startswith(b"%PDF-"):
         return "pdf"
-    if ext in ("html", "htm", "xhtml"):
+    if ext in _HTML_EXTS:
         return "html"
     if ext == "pdf":
         return "pdf"
@@ -299,9 +296,9 @@ def sniff_content_type(url: Optional[str], raw: Optional[bytes]) -> str:
         return "csv"
     if magic.startswith(b"WEBVTT") or ext == "vtt":
         return "vtt"
-    if ext in ("md", "markdown"):
+    if ext in _MD_EXTS:
         return "md"
-    if ext in ("adoc", "asciidoc", "asc"):
+    if ext in _ASCIIDOC_EXTS:
         return "asciidoc"
     if b"JATS-journalpublishing" in head_bin or b"JATS-archive" in head_bin:
         return "jats"
@@ -315,9 +312,9 @@ def sniff_content_type(url: Optional[str], raw: Optional[bytes]) -> str:
         return "ofd"
     if ext == "docx":
         return "docx"
-    if ext in ("xlsx", "xlsm"):
+    if ext in _XLSX_EXTS:
         return "xlsx"
-    if ext in ("pptx", "pptm", "potx"):
+    if ext in _PPTX_EXTS:
         return "pptx"
     if zip_member(b"word/document.xml"):
         return "docx"
@@ -330,13 +327,13 @@ def sniff_content_type(url: Optional[str], raw: Optional[bytes]) -> str:
     if (
         magic.startswith(_IMAGE_MAGICS)
         or (magic[:4] == b"RIFF" and magic[8:12] == b"WEBP")
-        or ext in ("png", "jpg", "jpeg", "gif", "tif", "tiff", "bmp", "webp")
+        or ext in _IMAGE_EXTS
     ):
         return "image"
     if (
         (magic[:4] == b"RIFF" and magic[8:12] == b"WAVE")
         or magic.startswith(b"ID3")
-        or ext in ("wav", "mp3", "m4a", "flac", "ogg")
+        or ext in _AUDIO_EXTS
     ):
         return "audio"
     if _DOCLING_JSON_PY.search(head):

@@ -8,7 +8,7 @@ GRADIENT — bit k = energy(frame k+1) > energy(frame k), 65 frames →
 scaling (``2a > 2b  ⇔  a > b``), the audio analog of dHash's
 brightness invariance: a re-mastered louder copy collapses onto its
 original. Pairing is the SAME banded-LSH Hamming stage the image op
-uses (ops/imagededup.dhash_near_dups — 4x16-bit bands, equi-join,
+uses (ops/dedup.banded_hamming_pairs — 4x16-bit bands, equi-join,
 bit_count(xor) verify), so the shuffle shape is shared across all
 three modalities.
 
@@ -30,10 +30,16 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from docling_spark.ops.imagededup import dhash_near_dups as banded_hamming_pairs
+from docling_spark.ops.corpus import read_documents
+from docling_spark.ops.dedup import (
+    HASH64_COLUMNS,
+    HASH64_SCHEMA,
+    banded_hamming_pairs,
+    hash64_row,
+)
 
+HAMMING_MAX = 6
 N_FRAMES = 65  # 64 energy comparisons = 64 bits
 
 
@@ -53,8 +59,7 @@ def audio_fingerprints(media: DataFrame, col: str = "wav") -> DataFrame:
         import numpy as np
 
         for b in batches:
-            out = {k: [] for k in
-                   ("doc_id", "h_hi", "h_lo", "band0", "band1", "band2", "band3")}
+            rows = []
             for doc_id, blob in zip(b["doc_id"], b[col]):
                 try:
                     blob = bytes(blob)
@@ -80,18 +85,10 @@ def audio_fingerprints(media: DataFrame, col: str = "wav") -> DataFrame:
                     bits = _fp_bits(energies)
                 except Exception:
                     continue  # corrupt container: skip row, never a task kill
-                out["doc_id"].append(int(doc_id))
-                out["h_hi"].append(bits >> 32)
-                out["h_lo"].append(bits & 0xFFFFFFFF)
-                for j in range(4):
-                    out[f"band{j}"].append((bits >> (16 * j)) & 0xFFFF)
-            yield pd.DataFrame(out)
+                rows.append(hash64_row(int(doc_id), bits))
+            yield pd.DataFrame(rows, columns=HASH64_COLUMNS)
 
-    return media.select("doc_id", col).mapInPandas(
-        run,
-        schema="doc_id long, h_hi long, h_lo long, "
-        "band0 long, band1 long, band2 long, band3 long",
-    )
+    return media.select("doc_id", col).mapInPandas(run, schema=HASH64_SCHEMA)
 
 
 # ------------------------------------------------------------------ corpus
@@ -107,10 +104,7 @@ def _aud_law_params(base: int) -> tuple[int, int, int, int]:
 
 
 def synth_audio_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:
-        docs = docs.repartition(par, "doc_id")
+    docs = read_documents(spark, sf_dir, "doc_id")
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -146,11 +140,13 @@ def synth_audio_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def audio_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return banded_hamming_pairs(audio_fingerprints(synth_audio_corpus(spark, sf_dir)))
+    return banded_hamming_pairs(
+        audio_fingerprints(synth_audio_corpus(spark, sf_dir)), HAMMING_MAX
+    )
 
 
 # ------------------------------------------------------------------ oracle
-def audiofp_oracle_sql(max_hamming: int = 6) -> str:
+def audiofp_oracle_sql(max_hamming: int = HAMMING_MAX) -> str:
     """DuckDB mirror from the sample law — no WAV bytes involved."""
     return f"""
     WITH ids AS (

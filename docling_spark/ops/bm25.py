@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import tokens
+
 __all__ = ["bm25_scores", "bm25_oracle_sql"]
 
 QUANT = 1024  # idf quantization denominator (dyadic => exact products)
@@ -41,12 +43,6 @@ B = 0.75
 
 def _eq_term(w: str):
     return lambda t: t == F.lit(w)
-
-
-def _toks(text: Column) -> Column:
-    return F.filter(
-        F.split(F.lower(text), r"\s+"), lambda t: F.length(t) > 0
-    )
 
 
 def bm25_scores(
@@ -64,8 +60,10 @@ def bm25_scores(
             "bm25_scores needs at least one query term (did upstream "
             "normalization drop them all?)"
         )
-    toks = _toks(F.col(text_col))
+    toks = F.col("__toks")
     base = docs.select(
+        "doc_id", tokens(F.lower(F.col(text_col))).alias("__toks")
+    ).select(
         "doc_id",
         F.size(toks).alias("dl"),
         # NB: the lambda must be single-parameter — F.filter treats a
@@ -104,15 +102,19 @@ def bm25_scores(
     matched = sum(
         (F.col(f"tf_{i}") > 0).cast("int") for i in range(len(terms))
     )
+    # unmatched docs sort last and are dropped after the top-k cut — the
+    # same rows as filtering first: a filter ahead of the sort would be
+    # pushed below the tf projection and tokenize every doc again
+    hit = F.col("matched") > 0
     return (
         scored.select(
             "doc_id",
             score.alias("score"),
             matched.alias("matched"),
         )
-        .filter(F.col("matched") > 0)
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
+        .orderBy(hit.desc(), F.col("score").desc(), F.col("doc_id"))
         .limit(k)
+        .filter(hit)
     )
 
 

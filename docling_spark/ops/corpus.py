@@ -14,25 +14,36 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def read_documents(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """``documents.parquet`` (only ``cols`` when given), spread over one
+    partition per core when it has fewer files than cores.
+
+    Synthesis spreads the small source rows BEFORE any explode or blob
+    build: the shuffle moves only those rows, and every downstream stage
+    (blob assembly, extraction) inherits the parallel partitioning, so
+    extract_pages' auto repartition skips its blob shuffle. Width =
+    exactly one partition per core (NOT par*4): every extra Python-stage
+    wave pays a measured ~150 ms fixed mapInPandas round-trip latency per
+    task, and the synthetic corpus is uniform so over-decomposition buys
+    no balance (at 100 TB the scan's file splits set the width and each
+    task amortizes the fixed cost over 100+ MB anyway).
+    """
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    if cols:
+        docs = docs.select(*cols)
+    par = spark.sparkContext.defaultParallelism
+    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
+        docs = docs.repartition(par, F.col("doc_id"))
+    return docs
+
+
 def synth_pages(
     spark: SparkSession, sf_dir: str, variants: int = 1
 ) -> DataFrame:
     """documents.parquet → deterministic pages table (xN url variants)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # spread synthesis across cores BEFORE the explode and the (big) html
-    # string build: the shuffle moves only the small source rows, and every
-    # downstream stage inherits the parallel partitioning (extract_pages'
-    # auto repartition then skips its blob shuffle). Keeping the explode
-    # upstream of the shuffle would serialize variant fan-out in one task.
-    # Width = exactly one partition per core (NOT par*4): every extra
-    # Python-stage wave pays a measured ~150 ms fixed mapInPandas
-    # round-trip latency per task, and the synthetic corpus is uniform so
-    # over-decomposition buys no balance (at 100 TB the scan's file
-    # splits set the width and each task amortizes the fixed cost over
-    # 100+ MB anyway).
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
+    # the explode runs after the spread: upstream of the shuffle it would
+    # serialize the variant fan-out in one task
+    docs = read_documents(spark, sf_dir)
     if variants > 1:
         docs = docs.withColumn(
             "_v", F.explode(F.sequence(F.lit(0), F.lit(variants - 1)))
@@ -136,15 +147,7 @@ def synth_pages_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mapInPandas) — never per-row ``udf()``."""
     import pandas as pd
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
-    # same upstream-widening as synth_pages: shuffle the small source rows so
-    # blob assembly (and extraction downstream) runs on every core without
-    # extract_pages ever needing to reshuffle the built blobs
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
+    docs = read_documents(spark, sf_dir, "doc_id", "text", "lang")
 
     def build(batches):
         for b in batches:
@@ -241,10 +244,7 @@ def synth_pages_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → PDFs carrying real embedded images."""
     import pandas as pd
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:
-        docs = docs.repartition(par, F.col("doc_id"))
+    docs = read_documents(spark, sf_dir, "doc_id")
 
     def build(batches):
         for b in batches:
@@ -281,12 +281,7 @@ def synth_pages_pdf_invoice(spark: SparkSession, sf_dir: str) -> DataFrame:
     every field of the invoice is a deterministic function of doc_id)."""
     import pandas as pd
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:
-        docs = docs.repartition(par, F.col("doc_id"))
+    docs = read_documents(spark, sf_dir, "doc_id", "text", "lang")
 
     def build(batches):
         for b in batches:
@@ -323,12 +318,7 @@ def synth_pages_pdf_encrypted(
 
     from ..pdfx.crypt import encrypt_pdf_rc4
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
+    docs = read_documents(spark, sf_dir, "doc_id", "text", "lang")
 
     def build(batches):
         for b in batches:
@@ -429,12 +419,7 @@ def synth_pages_pdf_structured(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → pages table of structured PDF blobs."""
     import pandas as pd
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
+    docs = read_documents(spark, sf_dir, "doc_id", "text", "lang")
 
     def build(batches):
         for b in batches:
@@ -467,10 +452,7 @@ def synth_pages_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     deeper than 2 parent hops: the innermost list item is 6 links from its
     section_header, so the chunker's bounded ancestor walk (not a fixed
     2-hop lookup) is required to resolve its heading."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
+    docs = read_documents(spark, sf_dir)
     w = lambda k: F.split_part(F.col("text"), F.lit(" "), F.lit(k))  # noqa: E731
     html_str = F.concat(
         F.lit("<html><head><title>Doc "),
@@ -641,10 +623,7 @@ def synth_pages_ofd(spark: SparkSession, sf_dir: str) -> DataFrame:
 def synth_pages_doctags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → doctags source blobs (the VLM-interchange input
     format), pure JVM string build mirroring the HTML corpus structure."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
+    docs = read_documents(spark, sf_dir)
     w = lambda k: F.split_part(F.col("text"), F.lit(" "), F.lit(k))  # noqa: E731
     did = F.col("doc_id").cast("string")
     id2 = F.lpad((F.col("doc_id") % 100).cast("string"), 2, "0")
@@ -677,10 +656,7 @@ def synth_pages_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     no format hint, so dispatch must detect CSV from content (the JVM
     analog of the reference's _detect_csv, document.py:659-686). Pure JVM
     string build: a 2-column header + one data row."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
+    docs = read_documents(spark, sf_dir)
     did = F.col("doc_id").cast("string")
     id2 = F.lpad((F.col("doc_id") % 100).cast("string"), 2, "0")
     csv_str = F.concat(
@@ -701,10 +677,7 @@ def synth_pages_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------- synthetic md / asciidoc sources
 def synth_pages_md(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → markdown source blobs (pure JVM string build)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
+    docs = read_documents(spark, sf_dir)
     md_str = F.concat(
         F.lit("# Document "),
         F.col("doc_id").cast("string"),
@@ -736,10 +709,7 @@ def synth_pages_md(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def synth_pages_asciidoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → asciidoc source blobs (pure JVM string build)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
+    docs = read_documents(spark, sf_dir)
     adoc_str = F.concat(
         F.lit("= Document "),
         F.col("doc_id").cast("string"),
@@ -860,12 +830,7 @@ def _zip_bytes(parts: dict[str, str]) -> bytes:
 def _synth_office_pages(spark, sf_dir, build, suffix):
     import pandas as pd
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:  # cheap file-count proxy (no RDD build)
-        docs = docs.repartition(par, F.col("doc_id"))
+    docs = read_documents(spark, sf_dir, "doc_id", "text", "lang")
 
     def gen(batches):
         for b in batches:

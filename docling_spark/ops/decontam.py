@@ -23,15 +23,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _tokens(text: Column) -> Column:
-    return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
+from .textstats import tokens
 
 
-def ngram_hashes(text: Column, n: int = 13) -> Column:
-    """Array of md5 hashes of the space-joined token N-grams of ``text``
-    (one full-sequence gram when the doc is shorter than N tokens)."""
-    toks = _tokens(text)
+def ngram_hashes(toks: Column, n: int = 13) -> Column:
+    """Array of md5 hashes of the space-joined N-grams of the token
+    column ``toks`` (one full-sequence gram when the doc is shorter than
+    N tokens)."""
     sz = F.size(toks)
     n_eff = F.least(F.lit(n), sz)
     starts = F.sequence(F.lit(1), sz - n_eff + 1)
@@ -44,7 +42,8 @@ def ngram_hashes(text: Column, n: int = 13) -> Column:
 def benchmark_grams(benchmarks: DataFrame, text_col: str = "text", n: int = 13) -> DataFrame:
     """Distinct N-gram hash dim from the eval corpus (broadcast side)."""
     return (
-        benchmarks.select(F.explode(ngram_hashes(F.col(text_col), n)).alias("gram"))
+        benchmarks.select(tokens(F.lower(F.col(text_col))).alias("__toks"))
+        .select(F.explode(ngram_hashes(F.col("__toks"), n)).alias("gram"))
         .distinct()
     )
 
@@ -65,22 +64,20 @@ def scrub_contaminated_spans(
     join-back into a broadcast join at runtime when the hit set is small
     (the common case); the rebuild is an in-row indexed lambda filter,
     the same pattern as C4 span removal (ops/c4.py)."""
-    toks = _tokens(F.col(text_col))
-    sz = F.size(toks)
-    n_eff = F.least(F.lit(n), sz)
-    grams = docs.select(
+    toked = docs.select("doc_id", tokens(F.lower(F.col(text_col))).alias("__toks"))
+    grams = toked.select(
         "doc_id",
-        F.posexplode(ngram_hashes(F.col(text_col), n)).alias("pos", "gram"),
+        F.posexplode(ngram_hashes(F.col("__toks"), n)).alias("pos", "gram"),
     )
     hits = (
         grams.join(F.broadcast(bench), "gram")
         .groupBy("doc_id")
         .agg(F.collect_list("pos").alias("starts"))
     )
-    joined = docs.join(hits, "doc_id", "left").select(
+    joined = toked.join(hits, "doc_id", "left").select(
         "doc_id",
-        toks.alias("__toks"),
-        n_eff.alias("__n_eff"),
+        "__toks",
+        F.least(F.lit(n), F.size("__toks")).alias("__n_eff"),
         F.coalesce("starts", F.array().cast("array<int>")).alias("__starts"),
     )
     kept = F.filter(
@@ -107,8 +104,8 @@ def decontaminate(
     (from :func:`benchmark_grams`). One slim exchange, no corpus
     re-shuffle (explode → broadcast left join → map-side re-collapse)."""
     grams = docs.select(
-        "doc_id", F.explode(ngram_hashes(F.col(text_col), n)).alias("gram")
-    )
+        "doc_id", tokens(F.lower(F.col(text_col))).alias("__toks")
+    ).select("doc_id", F.explode(ngram_hashes(F.col("__toks"), n)).alias("gram"))
     return (
         grams.join(
             F.broadcast(bench.withColumn("__hit", F.lit(1))), "gram", "left"

@@ -158,6 +158,36 @@ def lsh_candidate_pairs(
     )
 
 
+def _capped_overlaps(docs: DataFrame, k: int, max_doc_freq: int) -> DataFrame:
+    """(doc_a, doc_b, inter, sz_a, sz_b) for every doc pair sharing a
+    distinct k-char shingle: the capped inverted index. Shingles in more
+    than ``max_doc_freq`` docs leave BOTH the join and the set sizes, so
+    one common shingle never becomes a quadratic hot join key."""
+    sh = docs.select("doc_id", F.explode(_shingles(k)).alias("sh"))
+    hot = (
+        sh.groupBy("sh")
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") > max_doc_freq)
+        .select("sh")
+    )
+    sh = sh.join(F.broadcast(hot), "sh", "left_anti")
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    a = sh.alias("a")
+    b = sh.alias("b")
+    common = (
+        a.join(
+            b,
+            (F.col("a.sh") == F.col("b.sh"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count("*").alias("inter"))
+    )
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
+    return common.join(sa, "doc_a").join(sb, "doc_b")
+
+
 def jaccard_pairs(
     docs: DataFrame, k: int = 8, threshold: float = 0.8, max_doc_freq: int = 1000
 ) -> DataFrame:
@@ -173,27 +203,8 @@ def jaccard_pairs(
     hot join key; with it, the operator degrades gracefully if pointed at
     real data instead of the capped oracle corpus.
     """
-    sh = docs.select("doc_id", F.explode(_shingles(k)).alias("sh"))
-    hot = (
-        sh.groupBy("sh")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > max_doc_freq)
-        .select("sh")
-    )
-    sh = sh.join(F.broadcast(hot), "sh", "left_anti")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _capped_overlaps(docs, k, max_doc_freq)
         .withColumn(
             "jaccard",
             F.round(
@@ -219,7 +230,6 @@ def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     ).withColumn("h", F.md5("w"))
     votes = []
     for b in range(bits):
-        nib = F.locate  # noqa: F841 (doc aid)
         hexch = F.substring("h", 1 + b // 4, 1)
         val = F.instr(F.lit(_HEX), hexch) - 1
         bit = F.floor(val / F.lit(2 ** (3 - b % 4))).cast("int") % 2
@@ -233,66 +243,89 @@ def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     return agg.select("doc_id", bitstr.alias("simhash"))
 
 
-def simhash_candidate_pairs(
-    docs: DataFrame, bits: int = 16, bands: int = 4, max_hamming: int = 3
-) -> DataFrame:
-    """SimHash near-dup pairs, banded: the scale path for hamming-ball
-    search. Signatures split into ``bands`` equal substrings; any shared
-    band → candidate (a pair within hamming distance bands-1 must agree on
-    at least one band, pigeonhole), then the exact hamming distance filters
-    to ``max_hamming``. One equi-join on (band_idx, band_bits) instead of
-    an all-pairs comparison — identical shape to the MinHash LSH join."""
-    assert bits % bands == 0
-    width = bits // bands
-    sigs = simhash(docs, bits)
-    banded = sigs.select(
+# a 64-bit perceptual hash as banded_hamming_pairs reads it: two uint32
+# halves (exact BIGINT arithmetic on every engine) and 4 x 16-bit bands
+HASH64_COLUMNS = ("doc_id", "h_hi", "h_lo", "band0", "band1", "band2", "band3")
+HASH64_SCHEMA = ", ".join(f"{c} long" for c in HASH64_COLUMNS)
+
+
+def hash64_row(doc_id: int, bits: int) -> tuple:
+    """One HASH64_COLUMNS row of the 64-bit hash ``bits``."""
+    bands = [(bits >> (16 * j)) & 0xFFFF for j in range(4)]
+    return (doc_id, bits >> 32, bits & 0xFFFFFFFF, *bands)
+
+
+def banded_hamming_pairs(hashes: DataFrame, max_hamming: int) -> DataFrame:
+    """(id_a, id_b, hamming) for pairs of ``hashes`` rows sharing >= 1
+    band value within ``max_hamming`` bits — the Hamming-ball pair join
+    of SimHash text, dHash images and audio fingerprints. ``hashes``:
+    doc_id, the hash as ``h_*`` long words, its bands as ``band<j>``
+    longs. Band explode, ONE equi-join on (band index, band value)
+    instead of all-pairs, in-row ``bit_count(xor)`` verify, distinct."""
+    # the self-join reads the frame twice: persist it so an upstream
+    # Python codec (image and audio hashes) runs once
+    hashes = hashes.persist()
+    words = [c for c in hashes.columns if c.startswith("h_")]
+    bands = [c for c in hashes.columns if c.startswith("band")]
+    banded = hashes.select(
         "doc_id",
-        "simhash",
+        *words,
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.substring("simhash", 1 + i * width, width).alias(
-                            "band_bits"
-                        ),
-                    )
-                    for i in range(bands)
+                    F.struct(F.lit(j).alias("bj"), F.col(c).alias("bv"))
+                    for j, c in enumerate(bands)
                 ]
             )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band", "bk.band_bits")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
+        ).alias("band"),
+    ).select("doc_id", *words, "band.bj", "band.bv")
+    a, b = banded.alias("a"), banded.alias("b")
+    hamming = sum(
+        F.bit_count(F.col(f"a.{w}").bitwiseXOR(F.col(f"b.{w}"))) for w in words
+    )
+    return (
         a.join(
             b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_bits") == F.col("b.band_bits"))
+            (F.col("a.bj") == F.col("b.bj"))
+            & (F.col("a.bv") == F.col("b.bv"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
             F.col("a.doc_id").alias("id_a"),
             F.col("b.doc_id").alias("id_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
+            hamming.cast("long").alias("hamming"),
         )
+        .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-    hamming = F.aggregate(
-        F.sequence(F.lit(1), F.lit(bits)),
-        F.lit(0),
-        lambda acc, i: acc
-        + F.when(
-            F.col("sig_a").substr(i, F.lit(1))
-            != F.col("sig_b").substr(i, F.lit(1)),
-            1,
-        ).otherwise(0),
+
+
+def simhash_candidate_pairs(
+    docs: DataFrame, bits: int = 16, bands: int = 4, max_hamming: int = 3
+) -> DataFrame:
+    """SimHash near-dup pairs, banded: the scale path for hamming-ball
+    search. The ``bits``-char signature is read as one integer
+    (``conv(simhash, 2, 10)``) cut into ``bands`` equal bit bands; any
+    shared band → candidate (a pair within hamming distance bands-1
+    must agree on at least one band, pigeonhole), then the exact
+    hamming distance filters to ``max_hamming``
+    (:func:`banded_hamming_pairs`)."""
+    if bits % bands or bits > 63:
+        raise ValueError("need bits divisible by bands and bits <= 63")
+    width = bits // bands
+    h = F.conv("simhash", 2, 10).cast("long")
+    hashes = simhash(docs, bits).select(
+        "doc_id",
+        h.alias("h_sig"),
+        *[
+            F.shiftright(h, bits - (i + 1) * width)
+            .bitwiseAND((1 << width) - 1)
+            .alias(f"band{i}")
+            for i in range(bands)
+        ],
     )
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    return banded_hamming_pairs(hashes, max_hamming).select(
+        "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
     )
 
 
@@ -330,34 +363,11 @@ def containment_pairs(
     inter/sz = 1/32 = 0.03125 rounds differently under HALF_UP vs
     half-even).
     """
-    sh = docs.select("doc_id", F.explode(_shingles(k)).alias("sh"))
-    hot = (
-        sh.groupBy("sh")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > max_doc_freq)
-        .select("sh")
-    )
-    sh = sh.join(F.broadcast(hot), "sh", "left_anti")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
     c_a = F.col("inter") / F.col("sz_a")
     c_b = F.col("inter") / F.col("sz_b")
     jac = F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _capped_overlaps(docs, k, max_doc_freq)
         .filter(F.greatest(c_a, c_b) >= threshold)
         .select(
             "doc_a",

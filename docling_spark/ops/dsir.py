@@ -42,6 +42,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .textstats import bigrams, tokens
+
 N_BUCKETS = 64
 KEEP_FRAC = 0.25
 _Q = 1 << 20  # dyadic quantum 2^-20
@@ -56,25 +58,14 @@ def _bucket(s: Column, n_buckets: int) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 3), 16, 10).cast("int") % n_buckets
 
 
-def _features(text: Column, n_buckets: int) -> Column:
-    """Array of hashed unigram+bigram bucket ids (occurrences, not set)."""
-    words = F.filter(
-        F.split(F.lower(text), r"\s+"), lambda w: w != F.lit("")
-    )
-    nw = F.size(words)
+def _features(words: Column, n_buckets: int) -> Column:
+    """Array of hashed unigram+bigram bucket ids (occurrences, not set)
+    of the token column ``words``."""
     unis = F.transform(words, lambda w: _bucket(w, n_buckets))
-    bis = F.when(
-        nw >= 2,
-        F.transform(
-            F.sequence(F.lit(1), nw - 1),
-            lambda i: _bucket(
-                F.concat_ws(
-                    " ", F.element_at(words, i), F.element_at(words, i + 1)
-                ),
-                n_buckets,
-            ),
-        ),
-    ).otherwise(F.array().cast("array<int>"))
+    bis = F.transform(
+        bigrams(words),
+        lambda p: _bucket(F.concat_ws(" ", p["prev"], p["cur"]), n_buckets),
+    )
     return F.concat(unis, bis)
 
 
@@ -107,7 +98,9 @@ def dsir_weights(
     ``target_filter`` selects the trusted slice the raw pool should be
     reshaped toward (rows stay in the raw pool too, as in the paper).
     """
-    base = df.select("doc_id", _features(F.col(col), n_buckets).alias("fs"))
+    base = df.select(
+        "doc_id", tokens(F.lower(F.col(col))).alias("__words")
+    ).select("doc_id", _features(F.col("__words"), n_buckets).alias("fs"))
     # the hashed-feature explode (two md5+conv per occurrence) is by far
     # the dominant cost and has FOUR consumers (target model, raw model,
     # target total, scoring) — persist it once so each consumer reads the

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import tokens, value_counts
+
 __all__ = ["entropy_signals", "entropy_oracle_sql"]
 
 QUANT = 1 << 20  # per-term quantization (finer than lm_quality's 1/1024:
@@ -37,21 +39,14 @@ QUANT = 1 << 20  # per-term quantization (finer than lm_quality's 1/1024:
 
 
 def _entropy(symbols: Column) -> Column:
-    """Shannon entropy (nats) of a symbol array, dyadic per-term."""
+    """Shannon entropy (nats) of a symbol array column, dyadic per-term."""
     n = F.size(symbols).cast("double")
-    uniq = F.sort_array(F.array_distinct(symbols))
-    # ONE counting scan per distinct symbol (the O(distinct × len)
-    # dominant cost); the -p·ln(p) term is then pure arithmetic over
-    # the counts array
-    counts = F.transform(
-        uniq,
-        lambda s: F.size(F.filter(symbols, lambda x: x == s)).cast(
-            "double"
-        ),
-    )
+    # sorted by value (distinct, so the count never breaks a tie): the
+    # oracle's list_sort(list_distinct(..)) summation order
+    counts = F.sort_array(value_counts(symbols))
     terms = F.transform(
         counts,
-        lambda c: F.round(-(c / n) * F.log(c / n) * QUANT, 0) / QUANT,
+        lambda vc: F.round(-(vc["n"] / n) * F.log(vc["n"] / n) * QUANT, 0) / QUANT,
     )
     return F.when(
         F.size(symbols) > 0,
@@ -61,12 +56,14 @@ def _entropy(symbols: Column) -> Column:
 
 def entropy_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, text) -> char/word unigram entropy + distinct counts."""
-    from .bm25 import _toks  # the one whitespace tokenizer, oracle-mirrored
-
     t = F.col(text_col)
-    chars = F.filter(F.split(t, ""), lambda c: F.length(c) > 0)
-    words = _toks(t)
-    return docs.select(
+    arrays = docs.select(
+        "doc_id",
+        F.filter(F.split(t, ""), lambda c: F.length(c) > 0).alias("__chars"),
+        tokens(F.lower(t)).alias("__words"),
+    )
+    chars, words = F.col("__chars"), F.col("__words")
+    return arrays.select(
         "doc_id",
         F.size(chars).alias("n_chars"),
         F.size(F.array_distinct(chars)).alias("n_distinct_chars"),

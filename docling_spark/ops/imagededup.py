@@ -35,7 +35,14 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from docling_spark.ops.corpus import read_documents
+from docling_spark.ops.dedup import (
+    HASH64_COLUMNS,
+    HASH64_SCHEMA,
+    banded_hamming_pairs,
+    hash64_row,
+)
 
 HAMMING_MAX = 6
 GRID_W, GRID_H = 9, 8  # 9 samples/row -> 8 comparisons x 8 rows = 64 bits
@@ -62,8 +69,7 @@ def dhash_images(media: DataFrame, col: str = "png") -> DataFrame:
         from docling_spark.ops.png import decode_png
 
         for b in batches:
-            out = {k: [] for k in
-                   ("doc_id", "h_hi", "h_lo", "band0", "band1", "band2", "band3")}
+            rows = []
             for doc_id, blob in zip(b["doc_id"], b[col]):
                 try:
                     w, h, c, payload = decode_png(bytes(blob))
@@ -71,59 +77,17 @@ def dhash_images(media: DataFrame, col: str = "png") -> DataFrame:
                     bits = _dhash_bits(px, w, h)
                 except Exception:
                     continue  # corrupt raster: no hash row, never a task kill
-                out["doc_id"].append(int(doc_id))
-                out["h_hi"].append(bits >> 32)
-                out["h_lo"].append(bits & 0xFFFFFFFF)
-                for j in range(4):
-                    out[f"band{j}"].append((bits >> (16 * j)) & 0xFFFF)
-            yield pd.DataFrame(out)
+                rows.append(hash64_row(int(doc_id), bits))
+            yield pd.DataFrame(rows, columns=HASH64_COLUMNS)
 
-    return media.select("doc_id", col).mapInPandas(
-        run,
-        schema="doc_id long, h_hi long, h_lo long, "
-        "band0 long, band1 long, band2 long, band3 long",
-    )
+    return media.select("doc_id", col).mapInPandas(run, schema=HASH64_SCHEMA)
 
 
 def dhash_near_dups(hashes: DataFrame, max_hamming: int = HAMMING_MAX) -> DataFrame:
     """(id_a, id_b, hamming) for pairs sharing >= 1 LSH band with
-    Hamming distance <= max_hamming. Banding exchange + in-row verify;
-    never all-pairs."""
-    # the self-join would otherwise recompute the Python decode+hash
-    # stage on BOTH sides — persist the slim (doc_id, 6 longs) frame so
-    # the codec runs once (same rule as the DSIR feature explode)
-    hashes = hashes.persist()
-    bands = hashes.select(
-        "doc_id",
-        "h_hi",
-        "h_lo",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(j).alias("bj"), F.col(f"band{j}").alias("bv"))
-                for j in range(4)
-            ])
-        ).alias("band"),
-    ).select("doc_id", "h_hi", "h_lo", "band.bj", "band.bv")
-    a, b = bands.alias("a"), bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.bj") == F.col("b.bj"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            (
-                F.bit_count(F.col("a.h_hi").bitwiseXOR(F.col("b.h_hi")))
-                + F.bit_count(F.col("a.h_lo").bitwiseXOR(F.col("b.h_lo")))
-            ).cast("long").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-    return pairs
+    Hamming distance <= max_hamming (:func:`dedup.banded_hamming_pairs`:
+    banding exchange + in-row verify; never all-pairs)."""
+    return banded_hamming_pairs(hashes, max_hamming)
 
 
 # ------------------------------------------------------------------ corpus
@@ -154,10 +118,7 @@ def _law_px(base: int, x: int, y: int, boost3: bool) -> int:
 def synth_phash_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, png) — REAL PNGs (ops/png.py encoder) whose pixels obey
     the module law; includes brightness twins and local-edit twins."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    par = spark.sparkContext.defaultParallelism
-    if len(docs.inputFiles()) < par:
-        docs = docs.repartition(par, "doc_id")
+    docs = read_documents(spark, sf_dir, "doc_id")
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from docling_spark.ops.png import encode_png

@@ -22,19 +22,42 @@ Scale shape:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .textstats import bigrams, tokens
 
 OOV_NLL = 16.0  # unseen-token penalty, ~e^-16 mass
 QUANT = 1024  # logprob quantization denominator (dyadic => exact sums)
+
+
+def _bucketed(
+    items: DataFrame, nll: Column, head: float, tail: float
+) -> DataFrame:
+    """Per-doc rollup of scored ``items`` -> (doc_id, n_tokens, avg_nll,
+    bucket): head (< ``head``) / middle / tail (>= ``tail``) on the mean
+    ``nll``. One slim (doc_id, n, sum) partial-agg exchange."""
+    scored = items.groupBy("doc_id").agg(
+        F.count("*").alias("n_tokens"), F.sum(nll).alias("sum_nll")
+    )
+    avg = F.col("sum_nll") / F.col("n_tokens")
+    return scored.select(
+        "doc_id",
+        "n_tokens",
+        avg.alias("avg_nll"),
+        F.when(avg < head, "head")
+        .when(avg < tail, "middle")
+        .otherwise("tail")
+        .alias("bucket"),
+    )
 
 
 def train_unigram_lm(ref_docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(token, nll) from a trusted reference slice: nll = ln(total/count),
     quantized to 1/QUANT. The CCNet 'train on Wikipedia' step."""
     words = ref_docs.select(
-        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("token")
-    ).filter(F.col("token") != "")
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("token")
+    )
     counts = words.groupBy("token").agg(F.count("*").alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("total"))
     return (
@@ -58,25 +81,6 @@ BACKOFF_ALPHA = 0.4
 BACKOFF_NLL = round(__import__("math").log(1.0 / BACKOFF_ALPHA) * QUANT) / QUANT
 
 
-def _pairs(text_col: str):
-    """In-row (prev, cur) bigram structs of the whitespace tokens."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"),
-        lambda t: F.length(t) > 0,
-    )
-    n = F.size(toks)
-    return F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.struct(
-                F.element_at(toks, i).alias("prev"),
-                F.element_at(toks, i + 1).alias("cur"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<prev:string,cur:string>>"))
-
-
 def train_bigram_lm(ref_docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(prev, cur, nll2) from the trusted slice: nll2 = ln(c(prev ·) /
     c(prev cur)), quantized. Context counts are the bigram-start counts
@@ -85,8 +89,10 @@ def train_bigram_lm(ref_docs: DataFrame, text_col: str = "text") -> DataFrame:
     Scale shape: one (prev, cur) count agg (map-side combinable) + one
     slim per-prev agg joined back on prev — vocabulary-sized frames
     only, never the corpus."""
-    pairs = ref_docs.select(F.explode(_pairs(text_col)).alias("p")).select(
-        "p.prev", "p.cur"
+    pairs = (
+        ref_docs.select(tokens(F.lower(F.col(text_col))).alias("__toks"))
+        .select(F.explode(bigrams(F.col("__toks"))).alias("p"))
+        .select("p.prev", "p.cur")
     )
     c12 = pairs.groupBy("prev", "cur").agg(F.count("*").alias("c12"))
     c1 = c12.groupBy("prev").agg(F.sum("c12").alias("c1"))
@@ -116,23 +122,15 @@ def bigram_score(
     Scale shape mirrors lm_score: in-row item construction (rows stay
     in their partitions), two broadcast joins against the LM tables,
     one slim (doc_id, n, sum) partial-agg exchange."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"),
-        lambda t: F.length(t) > 0,
+    # a NULL context ahead of the first token turns the bigram pairs
+    # into the scored items: (NULL, t1), (t1, t2), ...
+    ctx = F.concat(
+        F.array(F.lit(None).cast("string")), tokens(F.lower(F.col(text_col)))
     )
-    n = F.size(toks)
-    items = F.when(
-        n >= 1,
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.struct(
-                F.when(i > 1, F.element_at(toks, i - 1)).alias("prev"),
-                F.element_at(toks, i).alias("cur"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<prev:string,cur:string>>"))
-    ex = docs.select("doc_id", F.explode(items).alias("it")).select(
-        "doc_id", "it.prev", "it.cur"
+    ex = (
+        docs.select("doc_id", ctx.alias("__toks"))
+        .select("doc_id", F.explode(bigrams(F.col("__toks"))).alias("it"))
+        .select("doc_id", "it.prev", "it.cur")
     )
     uni = uni_lm.select(F.col("token").alias("cur"), F.col("nll").alias("nll1"))
     joined = ex.join(F.broadcast(bi_lm), ["prev", "cur"], "left").join(
@@ -142,19 +140,7 @@ def bigram_score(
     nll = F.when(F.col("prev").isNull(), uni_nll).otherwise(
         F.coalesce("nll2", F.lit(BACKOFF_NLL) + uni_nll)
     )
-    scored = joined.groupBy("doc_id").agg(
-        F.count("*").alias("n_tokens"), F.sum(nll).alias("sum_nll")
-    )
-    avg = F.col("sum_nll") / F.col("n_tokens")
-    return scored.select(
-        "doc_id",
-        "n_tokens",
-        avg.alias("avg_nll"),
-        F.when(avg < head, "head")
-        .when(avg < tail, "middle")
-        .otherwise("tail")
-        .alias("bucket"),
-    )
+    return _bucketed(joined, nll, head, tail)
 
 
 def lm_score(
@@ -169,25 +155,12 @@ def lm_score(
     head (< ``head``) / middle / tail (>= ``tail``) on mean token NLL
     (monotone in unigram perplexity). Docs whose text tokenizes to
     nothing produce no row (the corpus contract guarantees tokens)."""
-    tokens = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("token"),
-    ).filter(F.col("token") != "")
-    scored = (
-        tokens.join(F.broadcast(lm), "token", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.sum(F.coalesce("nll", F.lit(oov_nll))).alias("sum_nll"),
-        )
+    toks = docs.select(
+        "doc_id", F.explode(tokens(F.lower(F.col(text_col)))).alias("token")
     )
-    avg = F.col("sum_nll") / F.col("n_tokens")
-    return scored.select(
-        "doc_id",
-        "n_tokens",
-        avg.alias("avg_nll"),
-        F.when(avg < head, "head")
-        .when(avg < tail, "middle")
-        .otherwise("tail")
-        .alias("bucket"),
+    return _bucketed(
+        toks.join(F.broadcast(lm), "token", "left"),
+        F.coalesce("nll", F.lit(oov_nll)),
+        head,
+        tail,
     )

@@ -48,6 +48,9 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dsir import _bucket
+from .textstats import tokens
+
 N_BUCKETS = 64
 ITERS = 4
 LR = 64.0  # full-batch GD over length-normalized features (sum_b x = 1)
@@ -69,16 +72,6 @@ def _qpy(x: float) -> float:
     return (math.floor(s + 0.5) if s >= 0 else math.ceil(s - 0.5)) / _Q
 
 
-def _bucket(s: Column, n_buckets: int) -> Column:
-    return F.conv(F.substring(F.md5(s), 1, 3), 16, 10).cast("int") % n_buckets
-
-
-def _doc_features(text: Column, n_buckets: int) -> Column:
-    """Array of hashed unigram bucket ids (occurrences)."""
-    words = F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != F.lit(""))
-    return F.transform(words, lambda w: _bucket(w, n_buckets))
-
-
 def train_quality_classifier(
     df: DataFrame,
     target_filter: Column,
@@ -96,11 +89,16 @@ def train_quality_classifier(
     spark = df.sparkSession
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
+    # a doc without tokens explodes to no feature rows; a size filter here
+    # would be pushed below the projection and hash every doc twice
     base = df.select(
         "doc_id",
         target_filter.cast("int").alias("y"),
-        _doc_features(F.col(col), n_buckets).alias("fs"),
-    ).filter(F.size("fs") > 0)
+        # hashed unigram bucket ids (occurrences)
+        F.transform(
+            tokens(F.lower(F.col(col))), lambda w: _bucket(w, n_buckets)
+        ).alias("fs"),
+    )
     feats = (
         base.select(
             "doc_id",

@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import tokens
+
 __all__ = ["readability", "readability_oracle_sql"]
 
 
@@ -59,15 +61,14 @@ def readability(docs: DataFrame) -> DataFrame:
     Output: doc_id, n_words, n_sentences, n_letters, n_syllables,
     ari, coleman_liau, flesch, flesch_band.
     """
-    # Counts are materialized in one projection first: every formula
-    # reference to an expression re-inlines it (Catalyst lambda/alias
-    # inlining), so computing ari/coleman/flesch straight off the raw
-    # split would tokenize the text ~8 times per row. After this
-    # projection each count is a column reference — one pass per doc.
-    words = F.filter(
-        F.split(F.col("text"), r"\s+"), lambda w: F.length(w) > 0
-    )
+    # Words, then counts, are materialized in projections first: every
+    # formula reference to an expression re-inlines it (Catalyst
+    # lambda/alias inlining), so computing ari/coleman/flesch straight
+    # off the raw split would tokenize the text ~8 times per row.
+    words = F.col("__words")
     counted = docs.select(
+        "doc_id", "text", tokens(F.col("text")).alias("__words")
+    ).select(
         "doc_id",
         F.size(words).cast("bigint").alias("n_words"),
         F.greatest(

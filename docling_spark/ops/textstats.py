@@ -7,11 +7,53 @@ in the hot path) and have exact ANSI-SQL oracles.
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 STOPWORDS = ["the", "a", "of", "and", "to", "in"]
+
+
+def tokens(text: Column) -> Column:
+    """The one whitespace tokenizer: the non-empty ``\\s+`` splits of
+    ``text`` (the oracles' ``list_filter(string_split_regex(.., '\\s+'),
+    ..)``). Callers lower-case by passing ``F.lower(...)``. An op that
+    reads the array more than once selects it into a column first:
+    Catalyst re-inlines the expression at every reference, lambda
+    bodies included."""
+    return F.filter(F.split(text, r"\s+"), lambda t: F.length(t) > 0)
+
+
+def bigrams(toks: Column) -> Column:
+    """In-row (prev, cur) structs of adjacent elements of the token
+    column ``toks``."""
+    n = F.size(toks)
+    return F.when(
+        n >= 2,
+        F.transform(
+            F.sequence(F.lit(1), n - 1),
+            lambda i: F.struct(
+                F.element_at(toks, i).alias("prev"),
+                F.element_at(toks, i + 1).alias("cur"),
+            ),
+        ),
+    ).otherwise(F.array().cast("array<struct<prev:string,cur:string>>"))
+
+
+def value_counts(arr: Column) -> Column:
+    """``array<struct<value, n>>``: each distinct element of ``arr``
+    (first-occurrence order) with its occurrence count — one counting
+    scan per distinct value, O(distinct × len). ``arr`` is read once
+    per distinct value, so pass a column, not an expression."""
+    return F.transform(
+        F.array_distinct(arr),
+        lambda v: F.struct(
+            v.alias("value"), F.size(F.filter(arr, lambda x: x == v)).alias("n")
+        ),
+    )
 
 
 def _occurrences(text: Column, word: str) -> Column:
@@ -22,6 +64,16 @@ def _occurrences(text: Column, word: str) -> Column:
         (F.length(padded) - F.length(F.replace(padded, F.lit(needle), F.lit(""))))
         / F.lit(len(needle))
     ).cast("bigint")
+
+
+def _stop_ratio(text: Column) -> tuple[Column, Column, Column]:
+    """(hits, ratio, lang_pred): whole-word STOPWORDS hits, their share of
+    the single-space tokens (4 places) and the >= 0.05 -> 'en' call."""
+    hits = functools.reduce(
+        operator.add, [_occurrences(text, w) for w in STOPWORDS]
+    )
+    ratio = F.round(hits.cast("double") / F.size(F.split(text, " ")), 4)
+    return hits, ratio, F.when(ratio >= 0.05, "en").otherwise("unknown")
 
 
 def token_count(docs: DataFrame) -> DataFrame:
@@ -54,17 +106,12 @@ def quality_score(docs: DataFrame) -> DataFrame:
 def lang_id(docs: DataFrame) -> DataFrame:
     """Stopword-hit-ratio language ID (n-gram-free heuristic; at crawl scale
     the same shape extends to char-trigram frequency profiles)."""
-    hits = None
-    for w in STOPWORDS:
-        occ = _occurrences(F.col("text"), w)
-        hits = occ if hits is None else hits + occ
-    n = F.size(F.split(F.col("text"), " "))
-    ratio = F.round(hits.cast("double") / n, 4)
+    hits, ratio, pred = _stop_ratio(F.col("text"))
     return docs.select(
         "doc_id",
         hits.alias("stop_hits"),
         ratio.alias("stop_ratio"),
-        F.when(ratio >= 0.05, "en").otherwise("unknown").alias("lang_pred"),
+        pred.alias("lang_pred"),
     )
 
 
@@ -94,9 +141,7 @@ def vocab_topk(docs: DataFrame, k: int = 50) -> DataFrame:
     (per-partition heaps, no global sort materialization); the two
     corpus constants ride a 1-row broadcast crossJoin. Zero Python.
     """
-    toks = docs.select(
-        F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("tok")
-    ).where(F.length("tok") > 0)
+    toks = docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
     tf = toks.groupBy("tok").agg(F.count("*").alias("tf"))
     consts = tf.agg(
         F.sum("tf").alias("total_tokens"),
@@ -124,13 +169,7 @@ def lang_confusion(docs: DataFrame) -> DataFrame:
     Scale shape: in-row prediction, one (lang, pred) agg with map-side
     combine, per-lang totals off the tiny cell frame via broadcast.
     """
-    hits = None
-    for w in STOPWORDS:
-        occ = _occurrences(F.col("text"), w)
-        hits = occ if hits is None else hits + occ
-    n_toks = F.size(F.split(F.col("text"), " "))
-    ratio = F.round(hits.cast("double") / n_toks, 4)
-    pred = F.when(ratio >= 0.05, "en").otherwise("unknown")
+    _, _, pred = _stop_ratio(F.col("text"))
     cell = (
         docs.select("lang", pred.alias("lang_pred"))
         .groupBy("lang", "lang_pred")

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .textstats import value_counts
+
 VOCAB = [
     "data", "spark", "table", "query", "scan", "join", "filter", "agg",
     "the", "and", "that", "with", "sort", "merge", "stream", "window",
@@ -296,6 +298,9 @@ def repetition_signals(df: DataFrame, col: str = "wtext") -> DataFrame:
     def chars(a: Column) -> Column:
         return F.aggregate(a, F.lit(0), lambda acc, x: acc + F.length(x))
 
+    def total(a: Column) -> Column:
+        return F.aggregate(a, F.lit(0), lambda acc, x: acc + x)
+
     def dup_frac(a: Column) -> Column:
         return F.round(
             F.lit(1.0) - F.size(F.array_distinct(a)).cast("double") / F.size(a),
@@ -303,51 +308,52 @@ def repetition_signals(df: DataFrame, col: str = "wtext") -> DataFrame:
         )
 
     def dup_char_frac(a: Column) -> Column:
-        d = F.aggregate(
+        d = total(
             F.transform(
-                F.array_distinct(a),
-                lambda x: (F.size(F.filter(a, lambda y: y == x)) - 1)
-                * F.length(x),
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
+                value_counts(a), lambda vc: (vc["n"] - 1) * F.length(vc["value"])
+            )
         )
         return F.round(d.cast("double") / chars(a), 4)
 
-    word_chars = chars(words)
+    # each n-gram array (and the word-character total every ratio
+    # divides by) is selected once: built inline, the array would be
+    # rebuilt inside every counting lambda that reads it
+    gram_ns = [n for n, _ in TOP_NGRAMS + DUP_NGRAMS]
+    arr = arr.select(
+        "*",
+        chars(words).alias("_word_chars"),
+        *[
+            F.when(
+                nw >= n,
+                F.transform(
+                    F.sequence(F.lit(0), nw - n),
+                    lambda i: F.array_join(F.slice(words, i + 1, n), " "),
+                ),
+            )
+            .otherwise(F.array().cast("array<string>"))
+            .alias(f"_g{n}")
+            for n in gram_ns
+        ],
+    )
+    word_chars = F.col("_word_chars")
 
-    def grams(n: int) -> Column:
-        return F.transform(
-            F.sequence(F.lit(0), nw - n),
-            lambda i: F.array_join(F.slice(words, i + 1, n), " "),
-        )
+    def gram_chars(vc: Column, n: int) -> Column:  # count * chars sans separators
+        return vc["n"] * (F.length(vc["value"]) - (n - 1))
 
     def top_gram_frac(n: int) -> Column:
-        g = grams(n)
         top = F.array_max(
-            F.transform(
-                F.array_distinct(g),
-                lambda x: F.size(F.filter(g, lambda y: y == x))
-                * (F.length(x) - (n - 1)),
-            )
+            F.transform(value_counts(F.col(f"_g{n}")), lambda vc: gram_chars(vc, n))
         )
         return F.when(
             nw >= n, F.round(top.cast("double") / word_chars, 4)
         ).otherwise(0.0)
 
     def dup_gram_frac(n: int) -> Column:
-        g = grams(n)
-
-        def weight(x: Column) -> Column:
-            cnt = F.size(F.filter(g, lambda y: y == x))
-            return F.when(
-                cnt >= 2, cnt * (F.length(x) - (n - 1))
-            ).otherwise(0)
-
-        s = F.aggregate(
-            F.transform(F.array_distinct(g), weight),
-            F.lit(0),
-            lambda acc, x: acc + x,
+        s = total(
+            F.transform(
+                value_counts(F.col(f"_g{n}")),
+                lambda vc: F.when(vc["n"] >= 2, gram_chars(vc, n)).otherwise(0),
+            )
         )
         return F.when(
             nw >= n, F.round(s.cast("double") / word_chars, 4)

@@ -343,11 +343,6 @@ def doc_structured_blocks(pages_cells: list[list[Cell]]) -> list[PdfBlock]:
     return blocks
 
 
-def doc_structured_spans(pages_cells: list[list[Cell]]) -> list[dict]:
-    """All pages' cells → one labeled, heading-parented span list."""
-    return blocks_to_spans(doc_structured_blocks(pages_cells))
-
-
 def blocks_to_spandoc(blocks: list[PdfBlock], page_sizes: list):
     """Labeled blocks → a SpanDoc (the doctags/serializer-facing form of
     the same structure blocks_to_spans flattens): headings parent as in

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
+
 from docling_spark.extractor import ExtractionResult, extract_document
 
 PDF = Path("/root/reference/tests/data/pdf")
@@ -104,9 +106,19 @@ def test_template_coercion_failure_yields_none_field():
 
 
 def test_template_unknown_type_rejected():
-    import pytest
-
     from docling_spark.extractor import compile_template
 
     with pytest.raises(ValueError):
         compile_template({"x": {"pattern": "a", "type": "uuid"}})
+
+
+# ------------------------------------------- content-type routing
+@pytest.mark.parametrize(
+    "blob, ct",
+    [(b"<!doctype html><html><body>x</body></html>", "html"), (b"", "other")],
+)
+def test_unsupported_content_type_is_failure(blob, ct):
+    r = extract_document(blob)
+    assert r.status == "failure"
+    assert r.pages == []
+    assert r.errors == [f"unsupported content type {ct}"]

@@ -3,6 +3,8 @@ __spark_entry__ query on Spark and its oracle on DuckDB, compare
 row-count + schema + order-insensitive values.
 
 Usage: python tools/correctness_check.py [sf_dir] [query ...]
+
+Exits 1 when any query fails or a named query is not in queries().
 """
 
 from __future__ import annotations
@@ -38,6 +40,12 @@ def main() -> None:
     import __spark_entry__ as entry
     from docling_spark.job import tuned_session
 
+    qs = entry.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown query name(s): {' '.join(unknown)}")
+        sys.exit(1)
+
     spark = tuned_session(master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -47,7 +55,6 @@ def main() -> None:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    qs = entry.queries()
     oracles = entry.oracle_sql()
     n_pass = n_fail = 0
     for name, fn in qs.items():
@@ -89,6 +96,8 @@ def main() -> None:
             n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     spark.stop()
+    if n_fail:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
